@@ -16,27 +16,26 @@ express):
   bot-detection rule). Demonstrates the full custom-stateful plumbing:
   state schema, event-time timeout, emission on both rollover and
   timeout.
+
+Every ``*_with_state`` operator runs on one keyed-state helper
+(:func:`_with_state`) and shares one contract: one fixed-size state row
+per key; per-key event-time order across micro-batches (replay in order
+or pre-sort the backlog); ``(ts, order)`` order within a batch; on a
+batch frame the twins of a batch fold delegate to it (dedup and CDC use
+one ranked window); parameter errors raise ``ValueError`` when the
+operator is built.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Tuple
+from typing import Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import StructType
 
 
 def session_window_agg(
@@ -89,25 +88,62 @@ def _f64(values) -> np.ndarray:
     return np.asarray(values, dtype="float64")
 
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("session_start", LongType()),  # epoch micros
-        StructField("last_ts", LongType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-    ]
-)
+def _bool(values) -> np.ndarray:
+    return np.asarray(values, dtype=bool)
 
-_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-        StructField("closed_by", LongType()),  # 0=gap rollover, 1=cap, 2=timeout
+
+def _ts(values) -> np.ndarray:
+    # epoch micros (None -> NaT) as the ns-resolution column Arrow expects
+    return np.asarray(values, dtype="datetime64[us]").astype("datetime64[ns]")
+
+
+# typed numpy column builders by Spark type; other types stay Python lists
+_COLUMN = {"bigint": _i64, "double": _f64, "boolean": _bool, "timestamp": _ts}
+
+_ORDER = ["_t", "o"]  # (ts, order) within a batch
+
+
+def _with_state(
+    keyed: DataFrame,
+    key_col: str,
+    step,
+    *,
+    state_schema: str,
+    out_schema: str,
+    order,
+    timeout: str = GroupStateTimeout.NoTimeout,
+    skip_known: bool = False,
+) -> DataFrame:
+    """``keyed.groupBy(key_col).applyInPandasWithState`` in append mode,
+    for a ``step(key, state, rows)`` that returns output row tuples (or
+    nothing).  Both schemas are DDL strings; ``rows`` is the key's batch
+    sorted by ``order``, or ``None`` on a timeout call.  With
+    ``skip_known`` a key whose state exists is skipped before its rows
+    are read.  Output timestamps are epoch micros."""
+    schema = StructType.fromDDL(out_schema)
+    columns = [
+        (f.name, _COLUMN.get(f.dataType.simpleString(), list))
+        for f in schema.fields
     ]
-)
+
+    def _fn(key, pdfs, state):
+        if skip_known and state.exists:
+            return
+        rows = None if state.hasTimedOut else _batch_rows(pdfs, order)
+        emitted = step(key[0], state, rows)
+        if emitted:
+            yield pd.DataFrame(
+                {n: c(v) for (n, c), v in zip(columns, zip(*emitted))},
+                copy=False,
+            )
+
+    return keyed.groupBy(key_col).applyInPandasWithState(
+        _fn,
+        outputStructType=schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
 
 
 def sessionize_with_state(
@@ -122,101 +158,74 @@ def sessionize_with_state(
     native ``session_window`` cannot express).
 
     Expects columns ``user_id``, ``ts``, ``value``. Emits one row per
-    closed session. State is one fixed-size row per active user —
+    closed session; ``closed_by`` is 0 for a gap rollover, 1 for the cap
+    and 2 for a timeout. State is one fixed-size row per active user —
     per-partition memory is bounded by active users, not events, and
     Spark's state store handles checkpointing/recovery.
+
+    On a stream an open session times out once the watermark passes its
+    last event plus the gap. A late batch can carry a session whose
+    deadline is already behind the current watermark (Spark filters late
+    rows against the previous batch's watermark); that session closes in
+    the same call as a timeout.
     """
     gap_us = gap_minutes * 60 * 1_000_000
+    gap_ms = gap_minutes * 60 * 1000
+    streaming = events.isStreaming
+    no_session = (None, None, 0, 0.0)
 
-    def _mk_out(out):
-        # typed numpy columnar construction, one frame per yield: the
-        # untyped tuple-list + .assign path built object-dtype columns
-        # pandas had to coerce and copy PER GROUP CALL (~1.5 ms each;
-        # 3k state calls per micro-batch pair at sf0.1 made frame
-        # construction the operator's hot path — measured 8x cheaper
-        # this way, 0.14 ms/call)
-        cols = list(zip(*out))
-        return pd.DataFrame(
-            {
-                "user_id": _i64(cols[0]),
-                "session_start": _i64(cols[1])
-                .astype("datetime64[us]").astype("datetime64[ns]"),
-                "session_end": _i64(cols[2])
-                .astype("datetime64[us]").astype("datetime64[ns]"),
-                "n_events": _i64(cols[3]),
-                "value_sum": _f64(cols[4]),
-                "closed_by": _i64(cols[5]),
-            },
-            copy=False,
-        )
-
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (user,) = key
+    def _step(user, state, rows):
+        start, last, n, vsum = state.get if state.exists else no_session
         out = []
+        if rows is not None:
+            # vectorize the per-row timestamp conversion once per batch;
+            # the session state machine itself is inherently sequential
+            ts_us = (
+                rows["ts"].astype("datetime64[ns]").astype("int64") // 1000
+            ).tolist()
+            vals = rows["value"].astype("float64").tolist()
+            for t_us, value in zip(ts_us, vals):
+                v = value if value == value else 0.0  # NaN-safe
+                if start is None:
+                    start, last, n, vsum = t_us, t_us, 1, v
+                elif t_us - last > gap_us:
+                    out.append((user, start, last, n, vsum, 0))
+                    start, last, n, vsum = t_us, t_us, 1, v
+                else:
+                    last, n, vsum = t_us, n + 1, vsum + v
+                if n >= max_events:
+                    out.append((user, start, last, n, vsum, 1))
+                    start = last = None
+                    n, vsum = 0, 0.0
 
-        if state.hasTimedOut:
+        if start is None:
             if state.exists:
-                start, last, n, vsum = state.get
-                out.append((user, start, last, n, vsum, 2))
                 state.remove()
-            if out:
-                yield _mk_out(out)
-            return
-
-        if state.exists:
-            start, last, n, vsum = state.get
-        else:
-            start = last = None
-            n, vsum = 0, 0.0
-
-        rows = _batch_rows(pdfs, "ts")
-        # vectorize the per-row timestamp conversion ONCE per batch (the
-        # pd.Timestamp(...).value path constructed an object per event);
-        # the session state machine itself is inherently sequential
-        ts_us_arr = (
-            rows["ts"].astype("datetime64[ns]").astype("int64") // 1000
-        ).tolist()
-        val_arr = rows["value"].astype("float64").tolist()
-        for t_us, value in zip(ts_us_arr, val_arr):
-            v = value if value == value else 0.0  # NaN-safe
-            if start is None:
-                start, last, n, vsum = t_us, t_us, 1, v
-            elif t_us - last > gap_us:
-                out.append((user, start, last, n, vsum, 0))
-                start, last, n, vsum = t_us, t_us, 1, v
-            else:
-                last, n, vsum = t_us, n + 1, vsum + v
-            if n >= max_events:
-                out.append((user, start, last, n, vsum, 1))
-                start = last = None
-                n, vsum = 0, 0.0
-
-        if start is not None:
-            state.update((start, last, n, vsum))
-            state.setTimeoutTimestamp(last // 1000 + gap_minutes * 60 * 1000)
-        elif state.exists:
+            return out
+        deadline = last // 1000 + gap_ms
+        if rows is None or (
+            streaming and deadline < state.getCurrentWatermarkMs()
+        ):
+            out.append((user, start, last, n, vsum, 2))
             state.remove()
+        else:
+            state.update((start, last, n, vsum))
+            state.setTimeoutTimestamp(deadline)
+        return out
 
-        if out:
-            yield _mk_out(out)
-
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    src = events.withWatermark("ts", watermark) if streaming else events
+    return _with_state(
+        src.select("user_id", "ts", "value"),
+        "user_id",
+        _step,
+        state_schema="session_start bigint, last_ts bigint, n_events bigint, "
+        "value_sum double",  # epoch micros
+        out_schema="user_id bigint, session_start timestamp, "
+        "session_end timestamp, n_events bigint, value_sum double, "
+        "closed_by bigint",
+        order="ts",
+        timeout=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-_DEDUP_STATE_SCHEMA = StructType([StructField("first_seen_us", LongType())])
 
 
 def global_dedup_with_state(
@@ -262,52 +271,22 @@ def global_dedup_with_state(
             .select("doc_id", F.col("_ts").alias("first_seen_ts"))
         )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("first_seen_ts", TimestampType()),
-        ]
-    )
-
-    def _fn(
-        key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            # content already emitted in an earlier batch: yield nothing
-            # (an empty all-NA frame would also work but trips pandas
-            # concat dtype warnings in the Arrow serializer)
-            return
-        rows = _batch_rows(pdfs, ["_ts", "doc_id"])
-        first = rows.iloc[0]
-        t_us = int(pd.Timestamp(first["_ts"]).value // 1000)
+    def _step(key, state, rows):
+        ts = pd.Timestamp(rows["_ts"].iat[0])
+        t_us = ts.value // 1000
         state.update((t_us,))
-        yield pd.DataFrame(
-            {
-                "doc_id": _i64([int(first["doc_id"])]),
-                "first_seen_ts": np.asarray(
-                    [pd.Timestamp(first["_ts"]).to_datetime64()],
-                    dtype="datetime64[ns]",
-                ),
-            },
-            copy=False,
-        )
+        return [(int(rows["doc_id"].iat[0]), None if ts is pd.NaT else t_us)]
 
-    return keyed.groupBy("_content_key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # content already emitted in an earlier batch: skip_known yields nothing
+    return _with_state(
+        keyed,
+        "_content_key",
+        _step,
+        state_schema="first_seen_us bigint",
+        out_schema="doc_id bigint, first_seen_ts timestamp",
+        order=["_ts", "doc_id"],
+        skip_known=True,
     )
-
-
-_CDC_STATE_SCHEMA = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("alive", LongType()),
-        StructField("payload", StringType()),
-    ]
-)
 
 
 def cdc_latest_with_state(
@@ -364,47 +343,24 @@ def cdc_latest_with_state(
             )
         )
 
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("seq", LongType()),
-            StructField("alive", LongType()),
-            StructField("payload", StringType()),
-        ]
-    )
-
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        rows = _batch_rows(pdfs, "seq")
-        last = rows.iloc[-1]
-        new_seq = int(last["seq"])
+    def _step(key, state, rows):
+        new_seq = int(rows["seq"].iat[-1])
         if state.exists and state.get[0] >= new_seq:
-            return  # stale/redelivered batch: state already newer
-        alive = 0 if str(last["_op"]) in dels else 1
-        payload = "" if last["payload"] is None else str(last["payload"])
+            return None  # stale/redelivered batch: state already newer
+        alive = 0 if str(rows["_op"].iat[-1]) in dels else 1
+        payload = rows["payload"].iat[-1]
+        payload = "" if payload is None else str(payload)
         state.update((new_seq, alive, payload))
-        yield pd.DataFrame(
-            {
-                "key": _i64([int(key[0])]),
-                "seq": _i64([new_seq]),
-                "alive": _i64([alive]),
-                "payload": [payload],
-            }
-        )
+        return [(key, new_seq, alive, payload)]
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_CDC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _with_state(
+        keyed,
+        "key",
+        _step,
+        state_schema="seq bigint, alive bigint, payload string",
+        out_schema="key bigint, seq bigint, alive bigint, payload string",
+        order="seq",
     )
-
-
-_RATE_STATE_SCHEMA = StructType(
-    [StructField("admitted", ArrayType(LongType()))]
-)
 
 
 def rate_limit_with_state(
@@ -420,13 +376,13 @@ def rate_limit_with_state(
     :func:`dbldatagen_spark.functions.ratelimit.rate_limit_events`:
     per-key token-bucket admission across micro-batches. State is the
     admitted-epoch list pruned to the trailing window — O(max_events)
-    longs per key, never history-sized. Assumes per-key event-time
-    order across batches (replay in order or pre-sort the backlog);
-    within a batch rows are processed in (ts, order) order. Emits
-    ``(key, order, allowed)`` per event; identical decisions to the
-    batch fold on an in-order stream (the real-run pytest asserts it).
-    On a batch frame it simply delegates to the batch fold.
+    longs per key, never history-sized. Emits ``(key, order, allowed)``
+    per event; identical decisions to the batch fold on an in-order
+    stream (the real-run pytest asserts it).
     """
+    if max_events < 1 or window_seconds <= 0:
+        raise ValueError("max_events must be >= 1 and window_seconds > 0, "
+                         f"got {max_events} and {window_seconds}")
     if not df.isStreaming:
         from dbldatagen_spark.functions.ratelimit import rate_limit_events
 
@@ -446,53 +402,30 @@ def rate_limit_with_state(
         ).cast("long").alias("_e"),
         F.col(order_col).cast("long").alias("o"),
     )
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("allowed", LongType()),
-        ]
-    )
-
     win = int(window_seconds)
     cap = int(max_events)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
+    def _step(key, state, rows):
         admitted = list(state.get[0]) if state.exists else []
-        rows = _batch_rows(pdfs, ["_e", "o"])
-        orders, flags = [], []
+        out = []
         for e, o in zip(rows["_e"], rows["o"]):
             e = int(e)
             admitted = [a for a in admitted if a > e - win]
             ok = len(admitted) < cap
             if ok:
                 admitted.append(e)
-            orders.append(int(o))
-            flags.append(1 if ok else 0)
+            out.append((key, int(o), 1 if ok else 0))
         state.update((admitted,))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "allowed": _i64(flags),
-                },
-                copy=False,
-            )
+        return out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _with_state(
+        keyed,
+        "key",
+        _step,
+        state_schema="admitted array<bigint>",
+        out_schema="key bigint, o bigint, allowed bigint",
+        order=["_e", "o"],
     )
-
-
-_EWMA_STATE_SCHEMA = StructType([StructField("last", DoubleType())])
 
 
 def ewma_with_state(
@@ -508,16 +441,14 @@ def ewma_with_state(
     :func:`dbldatagen_spark.functions.timeseries.ewma`: per-key
     exponentially weighted moving average across micro-batches. State
     is ONE double per key (the last smoothed value) — the minimal
-    possible streaming state. Assumes per-key event-time order across
-    batches (replay in order or pre-sort the backlog); within a batch
-    rows are processed in ``(ts, order)`` order. NULL values are
-    skipped without touching state, mirroring the batch fold's NULL
-    exclusion. Emits ``(key, o, value, ewma)`` per non-null event.
+    possible streaming state. NULL values are skipped without touching
+    state, mirroring the batch fold's NULL exclusion. Emits
+    ``(key, o, value, ewma)`` per non-null event.
 
     The recurrence ``a*v + (1-a)*s`` runs in IEEE doubles in the same
     order as the batch fold, so an in-order stream reproduces the
     batch result bit-for-bit (the real-run pytest asserts exact
-    equality). On a batch frame it simply delegates to the batch fold.
+    equality).
     """
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
@@ -539,56 +470,29 @@ def ewma_with_state(
         F.col(order_col).cast("long").alias("o"),
         F.col(value_col).cast("double").alias("v"),
     )
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("value", DoubleType()),
-            StructField("ewma", DoubleType()),
-        ]
-    )
     a = float(alpha)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
+    def _step(key, state, rows):
         last = float(state.get[0]) if state.exists else None
-        rows = _batch_rows(pdfs, ["_t", "o"])
-        orders, vals, smoothed = [], [], []
+        out = []
         for o, v in zip(rows["o"], rows["v"]):
             if pd.isna(v):
                 continue
             v = float(v)
             last = v if last is None else a * v + (1.0 - a) * last
-            orders.append(int(o))
-            vals.append(v)
-            smoothed.append(last)
+            out.append((key, int(o), v, last))
         if last is not None:
             state.update((last,))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "value": _f64(vals),
-                    "ewma": _f64(smoothed),
-                },
-                copy=False,
-            )
+        return out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _with_state(
+        keyed,
+        "key",
+        _step,
+        state_schema="last double",
+        out_schema="key bigint, o bigint, value double, ewma double",
+        order=_ORDER,
     )
-
-
-_CUSUM_STATE_SCHEMA = StructType(
-    [StructField("sp", DoubleType()), StructField("sn", DoubleType())]
-)
 
 
 def cusum_with_state(
@@ -610,11 +514,9 @@ def cusum_with_state(
     required here — the batch fold's self-calibrated per-key mean is a
     two-pass statistic a stream cannot know upfront; pass a monitoring
     target (and the batch call the pytest compares against uses the
-    same explicit target). Same ordering contract as the other twins:
-    per-key event-time order across batches, ``(ts, order)`` within a
-    batch. Emits ``(key, o, value, cusum_pos, cusum_neg, alarm)``;
-    bit-for-bit equal to the batch fold on an in-order stream. On a
-    batch frame it delegates to the batch fold.
+    same explicit target). Emits
+    ``(key, o, value, cusum_pos, cusum_neg, alarm)``; bit-for-bit equal
+    to the batch fold on an in-order stream.
     """
     if drift < 0.0:
         raise ValueError(f"drift must be >= 0, got {drift}")
@@ -648,27 +550,14 @@ def cusum_with_state(
         F.col(order_col).cast("long").alias("o"),
         F.col(value_col).cast("double").alias("v"),
     )
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("value", DoubleType()),
-            StructField("cusum_pos", DoubleType()),
-            StructField("cusum_neg", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
     d = float(drift)
     h = float(threshold)
     mu = float(target)
     reset = bool(reset_on_alarm)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
+    def _step(key, state, rows):
         sp, sn = state.get if state.exists else (0.0, 0.0)
-        rows = _batch_rows(pdfs, ["_t", "o"])
-        orders, vals, rps, rns, alarms = [], [], [], [], []
+        out = []
         for o, v in zip(rows["o"], rows["v"]):
             if pd.isna(v):
                 continue
@@ -677,40 +566,19 @@ def cusum_with_state(
             rn = max(0.0, sn + (mu - v - d))
             alarm = rp > h or rn > h
             sp, sn = (0.0, 0.0) if (reset and alarm) else (rp, rn)
-            orders.append(int(o))
-            vals.append(v)
-            rps.append(rp)
-            rns.append(rn)
-            alarms.append(alarm)
+            out.append((key, int(o), v, rp, rn, alarm))
         state.update((float(sp), float(sn)))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "value": _f64(vals),
-                    "cusum_pos": _f64(rps),
-                    "cusum_neg": _f64(rns),
-                    "alarm": np.asarray(alarms, dtype=bool),
-                },
-                copy=False,
-            )
+        return out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _with_state(
+        keyed,
+        "key",
+        _step,
+        state_schema="sp double, sn double",
+        out_schema="key bigint, o bigint, value double, cusum_pos double, "
+        "cusum_neg double, alarm boolean",
+        order=_ORDER,
     )
-
-
-_TRANSITION_STATE_SCHEMA = StructType(
-    [
-        StructField("last", LongType()),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
 
 
 def transition_counts_with_state(
@@ -726,9 +594,7 @@ def transition_counts_with_state(
     (:func:`dbldatagen_spark.functions.analytics.behavior_vectors`
     without the final normalization — counts, not frequencies): each
     key's cumulative ``k x k`` transition-count matrix over the explicit
-    ``states`` vocabulary, maintained across micro-batches.  This was
-    the one stateful family without a streaming twin: ewma/cusum carry
-    one-double state, CDC carries one row — here state is
+    ``states`` vocabulary, maintained across micro-batches.  State is
     ``(last-state index, k^2 count cells)`` per key, O(k^2) longs,
     never history-sized.
 
@@ -737,8 +603,7 @@ def transition_counts_with_state(
     event BREAKS the chain (``a -> X -> b`` contributes nothing), so an
     in-order replay's final emission equals the batch signature
     bit-for-bit (integer counts — asserted by the real-run pytest and
-    the registry conformance query).  Assumes per-key event-time order
-    across batches; within a batch rows sort by ``(ts, order)``.
+    the registry conformance query).
 
     Emits ``(key, n_transitions, counts)`` per key per batch — the
     CUMULATIVE signature after that batch (keys with no in-vocabulary
@@ -778,23 +643,13 @@ def transition_counts_with_state(
         F.col(order_col).cast("long").alias("o"),
         F.col(state_col).cast("string").alias("s"),
     )
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("n_transitions", LongType()),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
     idx = {s: i for i, s in enumerate(states)}
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
+    def _step(key, state, rows):
         if state.exists:
             last, counts = int(state.get[0]), list(state.get[1])
         else:
             last, counts = -1, [0] * (k * k)
-        rows = _batch_rows(pdfs, ["_t", "o"])
         for s in rows["s"]:
             cur = idx.get(s, -1)
             if last >= 0 and cur >= 0:
@@ -802,27 +657,16 @@ def transition_counts_with_state(
             last = cur  # out-of-vocab sets -1: breaks the chain, as batch
         state.update((last, counts))
         n = sum(counts)
-        if n:
-            yield pd.DataFrame(
-                {
-                    "key": _i64([int(key[0])]),
-                    "n_transitions": _i64([n]),
-                    "counts": [counts],
-                }
-            )
+        return [(key, n, counts)] if n else None
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_TRANSITION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _with_state(
+        keyed,
+        "key",
+        _step,
+        state_schema="last bigint, counts array<bigint>",
+        out_schema="key bigint, n_transitions bigint, counts array<bigint>",
+        order=_ORDER,
     )
-
-
-_HOLT_STATE_SCHEMA = StructType(
-    [StructField("l", DoubleType()), StructField("b", DoubleType())]
-)
 
 
 def holt_with_state(
@@ -838,14 +682,11 @@ def holt_with_state(
     """Streaming twin of
     :func:`dbldatagen_spark.functions.timeseries.holt_linear`: Holt's
     linear-trend smoother across micro-batches with TWO doubles of
-    state per key (the carried level and trend).  Same ordering
-    contract as the other twins: per-key event-time order across
-    batches, ``(ts, order)`` within a batch; NULL values skip without
-    touching state, mirroring the batch fold's NULL exclusion.  The
-    recurrences run in IEEE doubles in the identical sequence as the
-    batch fold, so an in-order stream reproduces level AND trend
-    bit-for-bit (the real-run pytest asserts exact equality).  On a
-    batch frame it delegates to the batch fold.  Emits
+    state per key (the carried level and trend).  NULL values skip
+    without touching state, mirroring the batch fold's NULL exclusion.
+    The recurrences run in IEEE doubles in the identical sequence as
+    the batch fold, so an in-order stream reproduces level AND trend
+    bit-for-bit (the real-run pytest asserts exact equality).  Emits
     ``(key, o, value, level, trend)`` per non-null event.
     """
     if not (0.0 < alpha <= 1.0):
@@ -872,29 +713,13 @@ def holt_with_state(
         F.col(order_col).cast("long").alias("o"),
         F.col(value_col).cast("double").alias("v"),
     )
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("value", DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-        ]
-    )
     a = float(alpha)
     bt = float(beta)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            lvl, trd = float(state.get[0]), float(state.get[1])
-            have = True
-        else:
-            lvl, trd, have = 0.0, 0.0, False
-        rows = _batch_rows(pdfs, ["_t", "o"])
-        orders, vals, levels, trends = [], [], [], []
+    def _step(key, state, rows):
+        have = state.exists
+        lvl, trd = (float(x) for x in state.get) if have else (0.0, 0.0)
+        out = []
         for o, v in zip(rows["o"], rows["v"]):
             if pd.isna(v):
                 continue
@@ -905,28 +730,17 @@ def holt_with_state(
                 l_new = a * v + (1.0 - a) * (lvl + trd)
                 trd = bt * (l_new - lvl) + (1.0 - bt) * trd
                 lvl = l_new
-            orders.append(int(o))
-            vals.append(v)
-            levels.append(lvl)
-            trends.append(trd)
+            out.append((key, int(o), v, lvl, trd))
         if have:
             state.update((lvl, trd))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "value": _f64(vals),
-                    "level": _f64(levels),
-                    "trend": _f64(trends),
-                },
-                copy=False,
-            )
+        return out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_HOLT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _with_state(
+        keyed,
+        "key",
+        _step,
+        state_schema="l double, b double",
+        out_schema="key bigint, o bigint, value double, level double, "
+        "trend double",
+        order=_ORDER,
     )

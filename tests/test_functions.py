@@ -1304,6 +1304,53 @@ def test_kmeans_partition_invariance(spark, emb):
     assert np.allclose(h1, h2, rtol=1e-12)
 
 
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_train"])
+def test_lloyd_fit_releases_cache_when_it_raises(spark, fit):
+    """A fit that fails inside its Lloyd loop must still release the
+    vectors it persisted. The last row's vector is shorter than the
+    seeds', so the first iteration's vstack raises on the workers after
+    the persisted frame has been built."""
+    from pyspark.errors import PythonException
+
+    from dbldatagen_spark.functions import similarity
+
+    rows = [(i, [float(i), float(i % 3), 1.0, 0.5]) for i in range(20)]
+    rows.append((20, [1.0, 2.0]))
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    kwargs = {"m": 2} if fit == "pq_train" else {}
+    jsc = spark.sparkContext._jsc
+
+    def _ids():
+        # id set, not size: other tests' caches are released
+        # asynchronously by the ContextCleaner
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = _ids()
+    with pytest.raises(PythonException):
+        getattr(similarity, fit)(df, "v", k=2, id_col="vec_id", **kwargs)
+    assert len(_ids() - before) == 0
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_train"])
+def test_lloyd_fit_stops_at_tol(spark, fit):
+    """Two well-separated clusters, seeded one in each (ids 0 and 1):
+    the assignment is final after the first iteration, so the inertia
+    stops moving and the ``tol`` check ends the fit long before
+    ``max_iter``."""
+    from dbldatagen_spark.functions import similarity
+
+    rows = [
+        (i, [10.0 * (i % 2) + 0.01 * (i // 2)] * 4) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    kwargs = {"m": 2} if fit == "pq_train" else {}
+    _, hist = getattr(similarity, fit)(
+        df, "v", k=2, id_col="vec_id", max_iter=25, **kwargs
+    )
+    assert len(hist) < 25
+    assert hist[-1] == pytest.approx(hist[-2])
+
+
 def test_tfidf_terms(spark):
     import math
 
