@@ -19,7 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 GEN_BENCH_ROWS = 10_000_000
 
@@ -129,7 +128,7 @@ def _bench_generate(spark) -> None:
             ),
             ColumnSpec("code", PatternColumn("ORD-{digit:6}-{alpha:2}")),
         ],
-        partitions=int(CPUS),
+        partitions=spark.sparkContext.defaultParallelism,
     )
     df = generate_table(spark, t, seed=42)
     # groupBy forces every column through codegen plus one shuffle round
@@ -139,21 +138,12 @@ def _bench_generate(spark) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
+    from dbldatagen_spark import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("dbldatagen_spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
+    spark = local_session("dbldatagen_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM so timings measure steady-state throughput, not one-off

@@ -111,7 +111,12 @@ from dbldatagen_spark.compat import (
     topologicalSort,
 )
 from dbldatagen_spark.datagen import _V0Column as ColumnGenerationSpec
-from dbldatagen_spark.session import RECOMMENDED_CONFIGS, tuned_builder, tuned_session
+from dbldatagen_spark.session import (
+    RECOMMENDED_CONFIGS,
+    local_session,
+    tuned_builder,
+    tuned_session,
+)
 from dbldatagen_spark.datagen import (
     DataRange,
     DateRange,
@@ -155,6 +160,7 @@ __all__ = [
     "ensure",
     "topologicalSort",
     "RECOMMENDED_CONFIGS",
+    "local_session",
     "tuned_builder",
     "tuned_session",
     "INFER_DATATYPE",

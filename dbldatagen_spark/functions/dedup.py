@@ -30,6 +30,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._guards import checkpointed
 from dbldatagen_spark.functions._parallel import ensure_parallelism
 
 # Fixed 64-bit odd constants; draw i-th minhash permutation as
@@ -1349,59 +1350,17 @@ def duplicate_components(
     preemptible/spot fleets). Pass ``checkpoint_dir`` (an HDFS/object-store
     path) to use *reliable* checkpointing for long-running production runs;
     the per-iteration write cost buys restartable lineage. The session's
-    previous checkpoint dir is restored on return; if the session had
-    NONE, the override is cleared again (a JVM-level
-    ``setCheckpointDir(null)`` — the Scala setter wraps its argument in
-    ``Option``, so null un-sets it; the Python wrapper rejects ``None``,
-    which is why the raw JVM handle is used). Either way the call leaves
-    no session-level side effect. Per-iteration checkpoint files are reclaimed by
+    checkpoint dir is restored to its exact prior value on return
+    (cleared again if it had none), so the call leaves no session-level
+    side effect. Per-iteration checkpoint files are reclaimed by
     the ContextCleaner when ``spark.cleaner.referenceTracking
     .cleanCheckpoints=true``; otherwise they accumulate under
     ``checkpoint_dir`` and the caller owns deleting them.
     """
-    spark = pairs.sparkSession
-
-    prev_checkpoint_dir: Optional[str] = None
-    had_prev_checkpoint_dir = False
-    if checkpoint_dir is not None:
-        sc = spark.sparkContext
-        prev_read_ok = True
-        try:
-            prev = sc._jsc.sc().getCheckpointDir()
-            had_prev_checkpoint_dir = prev.isDefined()
-            prev_checkpoint_dir = prev.get() if prev.isDefined() else None
-        except Exception:
-            # could not READ the prior state: restore nothing on exit
-            # (clearing would destroy a dir the session may have had)
-            prev_read_ok = False
-            prev_checkpoint_dir = None
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    try:
+    with checkpointed(pairs.sparkSession, checkpoint_dir) as checkpoint:
         return _propagate_components(
-            pairs, id_a, id_b, max_iterations, _checkpoint
+            pairs, id_a, id_b, max_iterations, checkpoint
         )
-    finally:
-        if checkpoint_dir is not None:
-            if had_prev_checkpoint_dir and prev_checkpoint_dir is not None:
-                if prev_checkpoint_dir != checkpoint_dir:
-                    spark.sparkContext.setCheckpointDir(prev_checkpoint_dir)
-            elif prev_read_ok and not had_prev_checkpoint_dir:
-                # the session had NO checkpoint dir before this call;
-                # clear the override so no session-level side effect
-                # survives (Scala's setter wraps its argument in
-                # Option, so a JVM-level null un-sets it)
-                try:
-                    spark.sparkContext._jsc.sc().setCheckpointDir(None)
-                except Exception:
-                    pass
 
 
 def _propagate_components(
@@ -1419,54 +1378,56 @@ def _propagate_components(
         .distinct()
         .persist()
     )
-    labels = edges.select(F.col("src").alias("vertex")).distinct().select(
-        "vertex", F.col("vertex").alias("component")
-    )
-    labels = _checkpoint(labels)
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["vertex"])
-            .groupBy("src")
-            .agg(F.min("component").alias("_nbr_min"))
+    try:
+        labels = edges.select(F.col("src").alias("vertex")).distinct().select(
+            "vertex", F.col("vertex").alias("component")
         )
-        stepped = labels.join(nbr, labels["vertex"] == nbr["src"], "left").select(
-            labels["vertex"],
-            F.least(
-                labels["component"], F.coalesce(F.col("_nbr_min"), labels["component"])
-            ).alias("component"),
-            # thread the pre-step label through so convergence reads off
-            # the checkpointed rows themselves — no per-round join of two
-            # checkpointed frames just to ask "did anything change"
-            labels["component"].alias("_prev"),
-        )
-        # pointer jumping: component ids are themselves vertices, so chase
-        # one extra hop per round for O(log diameter) convergence
-        x, y = stepped.alias("x"), stepped.alias("y")
-        jumped = x.join(
-            y, F.col("x.component") == F.col("y.vertex"), "left"
-        ).select(
-            F.col("x.vertex").alias("vertex"),
-            F.least(
-                F.col("x.component"),
-                F.coalesce(F.col("y.component"), F.col("x.component")),
-            ).alias("component"),
-            F.col("x._prev").alias("_prev"),
-        )
-        jumped = _checkpoint(jumped)
-        # the checkpoint just materialized (vertex, component, _prev); the
-        # convergence probe is a limit-1 scan of those cached blocks —
-        # before, it was a join of this round's and last round's label
-        # frames (a broadcast build + probe job per iteration)
-        changed = (
-            jumped.where(F.col("component") != F.col("_prev"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped.drop("_prev")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
+        labels = _checkpoint(labels)
+        for _ in range(max_iterations):
+            nbr = (
+                edges.join(labels, edges["dst"] == labels["vertex"])
+                .groupBy("src")
+                .agg(F.min("component").alias("_nbr_min"))
+            )
+            stepped = labels.join(nbr, labels["vertex"] == nbr["src"], "left").select(
+                labels["vertex"],
+                F.least(
+                    labels["component"], F.coalesce(F.col("_nbr_min"), labels["component"])
+                ).alias("component"),
+                # thread the pre-step label through so convergence reads off
+                # the checkpointed rows themselves — no per-round join of two
+                # checkpointed frames just to ask "did anything change"
+                labels["component"].alias("_prev"),
+            )
+            # pointer jumping: component ids are themselves vertices, so chase
+            # one extra hop per round for O(log diameter) convergence
+            x, y = stepped.alias("x"), stepped.alias("y")
+            jumped = x.join(
+                y, F.col("x.component") == F.col("y.vertex"), "left"
+            ).select(
+                F.col("x.vertex").alias("vertex"),
+                F.least(
+                    F.col("x.component"),
+                    F.coalesce(F.col("y.component"), F.col("x.component")),
+                ).alias("component"),
+                F.col("x._prev").alias("_prev"),
+            )
+            jumped = _checkpoint(jumped)
+            # the checkpoint just materialized (vertex, component, _prev); the
+            # convergence probe is a limit-1 scan of those cached blocks —
+            # before, it was a join of this round's and last round's label
+            # frames (a broadcast build + probe job per iteration)
+            changed = (
+                jumped.where(F.col("component") != F.col("_prev"))
+                .limit(1)
+                .count()
+            )
+            labels = jumped.drop("_prev")
+            if changed == 0:
+                break
+        return labels
+    finally:
+        edges.unpersist()
 
 
 def minhash_cluster_dedup(
@@ -1506,67 +1467,77 @@ def minhash_cluster_dedup(
         F.col(id_col),
         F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias("_shash"),
     ).persist()
-    sig_exprs = minhash_signature_exprs(F.col("_shash"), num_hashes, pre_hashed=True)
-    sig = hashed.select(F.col(id_col), F.array(*sig_exprs).alias("_sig"))
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.element_at(F.col("_sig"), b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    # bucket minima via a map-side-combined aggregate + join, NOT an
-    # unordered window over the bucket key: a mega-bucket (mass-
-    # identical documents — exactly the corpus this operator's star
-    # contraction exists for) would buffer every member row in one
-    # window task, and AQE's skew splitting never applies to windows.
-    # The aggregate bounds reducer volume at distinct-buckets x
-    # map-tasks, and the join-back is AQE-skew-splittable.  buckets is
-    # persisted (24 bytes/row x bands — cheaper than re-evaluating the
-    # signature expressions for the join's second branch) and released
-    # with the shingle cache below.
-    buckets = sig.select(
-        F.col(id_col), F.posexplode_outer(band_keys).alias("_band", "_key")
-    ).where(F.col("_key").isNotNull()).persist()
-    mins = buckets.groupBy("_band", "_key").agg(
-        F.min(id_col).alias("_min_id")
-    )
-    star = (
-        buckets.join(mins, ["_band", "_key"])
-        .where(F.col(id_col) != F.col("_min_id"))
-        .select(F.col(id_col).alias("id_a"), F.col("_min_id").alias("id_b"))
-        .distinct()
-    )
-    if verify:
-        sh_a = hashed.select(F.col(id_col).alias("id_a"), F.col("_shash").alias("_sh_a"))
-        sh_b = hashed.select(F.col(id_col).alias("id_b"), F.col("_shash").alias("_sh_b"))
+    buckets = None
+    try:
+        sig_exprs = minhash_signature_exprs(
+            F.col("_shash"), num_hashes, pre_hashed=True
+        )
+        sig = hashed.select(F.col(id_col), F.array(*sig_exprs).alias("_sig"))
+        band_keys = F.array(
+            *[
+                F.xxhash64(
+                    F.lit(b),
+                    *[
+                        F.element_at(F.col("_sig"), b * rows_per_band + r + 1)
+                        for r in range(rows_per_band)
+                    ],
+                )
+                for b in range(bands)
+            ]
+        )
+        # bucket minima via a map-side-combined aggregate + join, NOT an
+        # unordered window over the bucket key: a mega-bucket (mass-
+        # identical documents — exactly the corpus this operator's star
+        # contraction exists for) would buffer every member row in one
+        # window task, and AQE's skew splitting never applies to windows.
+        # The aggregate bounds reducer volume at distinct-buckets x
+        # map-tasks, and the join-back is AQE-skew-splittable.  buckets is
+        # persisted (24 bytes/row x bands — cheaper than re-evaluating the
+        # signature expressions for the join's second branch) and released
+        # with the shingle cache in the finally below.
+        buckets = sig.select(
+            F.col(id_col), F.posexplode_outer(band_keys).alias("_band", "_key")
+        ).where(F.col("_key").isNotNull()).persist()
+        mins = buckets.groupBy("_band", "_key").agg(
+            F.min(id_col).alias("_min_id")
+        )
         star = (
-            star.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .where(
-                F.size(F.array_intersect("_sh_a", "_sh_b"))
-                / F.size(F.array_union("_sh_a", "_sh_b"))
-                >= F.lit(threshold)
+            buckets.join(mins, ["_band", "_key"])
+            .where(F.col(id_col) != F.col("_min_id"))
+            .select(F.col(id_col).alias("id_a"), F.col("_min_id").alias("id_b"))
+            .distinct()
+        )
+        if verify:
+            sh_a = hashed.select(
+                F.col(id_col).alias("id_a"), F.col("_shash").alias("_sh_a")
             )
-            .select("id_a", "id_b")
+            sh_b = hashed.select(
+                F.col(id_col).alias("id_b"), F.col("_shash").alias("_sh_b")
+            )
+            star = (
+                star.join(sh_a, "id_a")
+                .join(sh_b, "id_b")
+                .where(
+                    F.size(F.array_intersect("_sh_a", "_sh_b"))
+                    / F.size(F.array_union("_sh_a", "_sh_b"))
+                    >= F.lit(threshold)
+                )
+                .select("id_a", "id_b")
+            )
+        comp = duplicate_components(star)
+        ids = df.select(F.col(id_col))
+        out = (
+            ids.join(comp, ids[id_col] == comp["vertex"], "left")
+            .select(
+                F.col(id_col),
+                F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
+            )
         )
-    comp = duplicate_components(star)
-    ids = df.select(F.col(id_col))
-    out = (
-        ids.join(comp, ids[id_col] == comp["vertex"], "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
-        )
-    )
-    hashed.unpersist()
-    buckets.unpersist()
-    return out
+        return out
+    finally:
+        hashed.unpersist()
+        if buckets is not None:
+            buckets.unpersist()
 
 
 def cross_corpus_near_duplicates(

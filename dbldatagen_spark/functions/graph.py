@@ -14,6 +14,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._guards import checkpointed
+
 
 def pagerank(
     edges: DataFrame,
@@ -77,7 +79,8 @@ def pagerank(
     (``localCheckpoint`` by default; pass ``checkpoint_dir`` for
     reliable checkpointing on preemptible fleets — the
     :func:`~dbldatagen_spark.functions.dedup.duplicate_components`
-    contract) so plan depth stays constant across iterations.
+    contract, including the exact restore of the session's checkpoint
+    dir) so plan depth stays constant across iterations.
     Driver cost: one count job up front plus one materializing action
     per iteration.
     """
@@ -120,31 +123,7 @@ def pagerank(
             .groupBy("_s", "_d")
             .agg(F.sum("_w").alias("_w"))
         )
-    spark = edges.sparkSession
-    prev_dir: Optional[str] = None
-    had_prev_dir = False
-    if checkpoint_dir is not None:
-        sc = spark.sparkContext
-        prev_read_ok = True
-        try:
-            prev = sc._jsc.sc().getCheckpointDir()
-            had_prev_dir = prev.isDefined()
-            prev_dir = prev.get() if prev.isDefined() else None
-        except Exception:
-            # could not READ the prior state: restore nothing on exit
-            # (clearing would destroy a dir the session may have had)
-            prev_read_ok = False
-            prev_dir = None
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    try:
+    with checkpointed(edges.sparkSession, checkpoint_dir) as _checkpoint:
         # checkpoint e FIRST and derive nodes from the truncated
         # lineage: defining nodes from the raw plan would re-execute
         # the entire upstream (e.g. host_authority's corpus scan)
@@ -259,20 +238,6 @@ def pagerank(
             F.col("_u").alias("rank_units"),
             (F.col("_u").cast("double") / F.lit(float(scale))).alias("rank"),
         )
-    finally:
-        if checkpoint_dir is not None:
-            if had_prev_dir and prev_dir is not None:
-                spark.sparkContext.setCheckpointDir(prev_dir)
-            elif prev_read_ok and not had_prev_dir:
-                # the session had NO checkpoint dir before this call;
-                # leaving ours set would be a lasting session-level
-                # side effect.  The Scala setter wraps its argument in
-                # Option(...), so a JVM-level null clears it (the
-                # Python wrapper rejects None, hence _jsc).
-                try:
-                    spark.sparkContext._jsc.sc().setCheckpointDir(None)
-                except Exception:
-                    pass
 
 
 def host_authority(

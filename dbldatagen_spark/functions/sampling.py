@@ -1111,12 +1111,16 @@ def authority_weighted_sample(
         if broadcast_authority:
             ranks = F.broadcast(ranks)
         joined = df.withColumn(out_node, host).join(ranks, out_node, "left")
-    joined = joined.crossJoin(F.broadcast(mxf))
+    # the duplicate-key guard is a filter, not a projected column, so a
+    # consumer that selects only the input columns cannot prune it away
+    joined = joined.crossJoin(F.broadcast(mxf)).where(
+        F.when(
+            F.col("_aws_n") != F.col("_aws_nd"),
+            F.raise_error(dup_msg).cast("boolean"),
+        ).otherwise(F.lit(True))
+    )
     base_l = F.lit(base_ppm).cast("long")
     ppm = F.when(
-        F.col("_aws_n") != F.col("_aws_nd"),
-        F.raise_error(dup_msg).cast("long"),
-    ).when(
         # empty/degenerate authority: every document keeps at the
         # floor rate (documented — never a silent full-keep)
         F.col("_aws_mx").isNull() | (F.col("_aws_mx") <= 0),

@@ -30,8 +30,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
+from dbldatagen_spark import local_session
 from dbldatagen_spark.functions import (
     kmv_set_ops,
     kmv_sketch,
@@ -46,13 +47,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("ann-serving-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
     emb = (
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

@@ -26,8 +26,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
+from dbldatagen_spark import local_session
 from dbldatagen_spark.functions import (
     bpe_train,
     containment_pairs,
@@ -40,13 +41,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("corpus-survey-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))

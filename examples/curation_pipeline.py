@@ -24,9 +24,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from dbldatagen_spark import local_session
     from dbldatagen_spark.functions import (
         contrastive_negatives,
         budget_select,
@@ -41,14 +41,7 @@ def main() -> None:
         split_assign,
     )
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("curation-pipeline")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("curation-pipeline")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n0 = docs.count()
 

@@ -18,7 +18,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from dbldatagen_spark import (
@@ -37,16 +36,10 @@ def main() -> None:
         WeightedValues,
         Zipf,
         generate,
+        local_session,
     )
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("dbldatagen_spark-example")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("dbldatagen_spark-example")
     spark.sparkContext.setLogLevel("ERROR")
 
     # ------------------------------------------------------------------

@@ -23,9 +23,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from dbldatagen_spark import local_session
     from dbldatagen_spark.functions import (
         cms_heavy_hitters,
         cms_join_size,
@@ -44,14 +44,7 @@ def main() -> None:
         DEFAULT_MAX_EVENTS_APPEND_FOLD,
     )
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("monitoring-pipeline")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("monitoring-pipeline")
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
     day1 = events.where("event_id % 2 = 0")  # stand-ins for two daily batches
     day2 = events.where("event_id % 2 = 1")

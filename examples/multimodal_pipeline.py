@@ -16,8 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
+from dbldatagen_spark import local_session
 from dbldatagen_spark.functions import (
     detect_media_types,
     extract_audio_features,
@@ -33,13 +34,7 @@ from dbldatagen_spark.functions.multimodal import (
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("multimodal-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     # ------------------------------------------------------------------

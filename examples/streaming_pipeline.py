@@ -15,10 +15,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from dbldatagen_spark import DataGenerator
+    from dbldatagen_spark import DataGenerator, local_session
     from dbldatagen_spark.sources.sinks import OutputDataset, write_data_to_output
     from dbldatagen_spark.streaming import (
         build_streaming,
@@ -26,14 +25,7 @@ def main() -> None:
         session_window_agg,
     )
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("dbldatagen_spark-streaming-example")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("dbldatagen_spark-streaming-example")
     spark.sparkContext.setLogLevel("ERROR")
 
     with tempfile.TemporaryDirectory() as td:

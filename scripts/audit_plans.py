@@ -29,7 +29,7 @@ FEATURES = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from dbldatagen_spark import local_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
         else "/root/testdata/sf0.01"
@@ -37,19 +37,12 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        # AQE off so the codegen explain sees concrete WholeStageCodegen
-        # subtrees (under AQE the pre-execution plan is a lazy
-        # AdaptiveSparkPlan with none); the counted node set matches the
-        # AQE initial plan, so the feature counts are unchanged
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("plan-audit")
+    # AQE off so the codegen explain sees concrete WholeStageCodegen
+    # subtrees (under AQE the pre-execution plan is a lazy
+    # AdaptiveSparkPlan with none); the counted node set matches the
+    # AQE initial plan, so the feature counts are unchanged
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("FATAL")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     cg_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -20,19 +20,10 @@ def main() -> None:
     out_dir, tag, sf_dir = sys.argv[1], sys.argv[2], sys.argv[3]
     names = sys.argv[4:]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from dbldatagen_spark import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("capture-plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     os.makedirs(out_dir, exist_ok=True)

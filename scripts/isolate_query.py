@@ -8,7 +8,7 @@ plans/r16/<query>_<tag>.txt when --save-plan <tag> is given.
 
 Usage:
     python scripts/isolate_query.py <sf_dir> <query> [query ...]
-        [--save-plan before|after] [--cpus N]
+        [--save-plan before|after]
 """
 
 from __future__ import annotations
@@ -28,27 +28,12 @@ def main() -> None:
         i = raw.index("--save-plan")
         tag = raw[i + 1]
         del raw[i:i + 2]
-    cpus = "32"
-    if "--cpus" in raw:
-        i = raw.index("--cpus")
-        cpus = raw[i + 1]
-        del raw[i:i + 2]
     sf_dir, names = raw[0], raw[1:]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from dbldatagen_spark import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("isolate-query")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    spark = local_session("isolate-query")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 

@@ -14,8 +14,11 @@ after a count(), so AQE's final plan is what gets reported.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -25,19 +28,10 @@ def main() -> None:
     qname = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName(f"profile-{qname}")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    sys.path.insert(0, ".")
     import __spark_entry__ as entrymod
+    from dbldatagen_spark import local_session
+
+    spark = local_session(f"profile-{qname}")
 
     queries = entrymod.queries()
     if qname not in queries:

@@ -61,23 +61,6 @@ VOCAB = [
 ]
 
 
-def _session():
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scaling-probe")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
-
-
 def generate(spark, out_dir: str) -> None:
     from dbldatagen_spark import DataGenerator
 
@@ -313,7 +296,9 @@ def main() -> None:
         queries = [q for q in args[i + 1].split(",") if q]
         del args[i:i + 2]
     mode = args[0] if args else "all"
-    spark = _session()
+    from dbldatagen_spark import local_session
+
+    spark = local_session("scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
     if mode in ("gen", "all"):
         print(f"generating sf1 set at {out_dir} ...")

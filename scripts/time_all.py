@@ -23,19 +23,10 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     threshold = float(sys.argv[2]) if len(sys.argv) > 2 else 8.0
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from dbldatagen_spark import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("time-all")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session("time-all")
     spark.sparkContext.setLogLevel("ERROR")
 
     timings = []

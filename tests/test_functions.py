@@ -458,11 +458,11 @@ def test_duplicate_components_restores_checkpoint_dir(spark, tmp_path):
     prior = str(tmp_path / "prior")
     spark.sparkContext.setCheckpointDir(prior)
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    before = spark.sparkContext._jsc.sc().getCheckpointDir().get()
     duplicate_components(pairs, checkpoint_dir=str(tmp_path / "other")).collect()
-    # setCheckpointDir nests a UUID subdir, so compare trees not paths
     after = spark.sparkContext._jsc.sc().getCheckpointDir()
     assert after.isDefined()
-    assert "prior" in after.get() and "other" not in after.get()
+    assert after.get() == before
 
 
 def test_duplicate_components_clears_checkpoint_dir_when_none(
@@ -1328,6 +1328,40 @@ def test_lloyd_fit_releases_cache_when_it_raises(spark, fit):
     before = _ids()
     with pytest.raises(PythonException):
         getattr(similarity, fit)(df, "v", k=2, id_col="vec_id", **kwargs)
+    assert len(_ids() - before) == 0
+
+
+@pytest.mark.parametrize(
+    "op", ["duplicate_components", "minhash_cluster_dedup"]
+)
+def test_cluster_ops_release_caches_when_they_raise(spark, monkeypatch, op):
+    """A call that fails partway must still release what it persisted.
+    The first lineage checkpoint runs its input, which builds the edge
+    cache (and, for minhash, the shingle and bucket caches), then
+    raises."""
+    from dbldatagen_spark.functions import dedup
+
+    df = spark.range(6).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") + 1).alias("id_b"),
+        F.lit("the same short document text for every row").alias("text"),
+    )
+    args = ("doc_id", "text") if op == "minhash_cluster_dedup" else (
+        "doc_id", "id_b")
+
+    def fail_after_running(self, *a, **kw):
+        self.count()
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(type(df), "localCheckpoint", fail_after_running)
+    jsc = spark.sparkContext._jsc
+
+    def _ids():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = _ids()
+    with pytest.raises(RuntimeError, match="boom"):
+        getattr(dedup, op)(df, *args)
     assert len(_ids() - before) == 0
 
 
@@ -8328,6 +8362,7 @@ class TestPagerank:
         sc = spark.sparkContext
         sc.setCheckpointDir(str(tmp_path / "prior"))
         try:
+            before = sc._jsc.sc().getCheckpointDir().get()
             edges = spark.createDataFrame(self.EDGES, "s string, d string")
             pagerank(
                 edges, "s", "d", iterations=2,
@@ -8335,7 +8370,7 @@ class TestPagerank:
             ).collect()
             after = sc._jsc.sc().getCheckpointDir()
             assert after.isDefined()
-            assert "prior" in after.get() and "other" not in after.get()
+            assert after.get() == before
         finally:
             sc._jsc.sc().setCheckpointDir(None)
 
@@ -9153,6 +9188,20 @@ class TestAuthorityWeightedSample:
         assert ("Deduplicate" in plan2) or ("Aggregate" in plan2)
         assert plan2.count("Join") >= 2
         assert plan2.count("array_contains") == 1
+
+    def test_duplicate_key_guard_survives_column_pruning(self, spark):
+        from dbldatagen_spark.functions import (
+            authority_weighted_sample, host_authority,
+        )
+
+        # a consumer that keeps only the pass-through columns must still
+        # hit the duplicate-key error, not a silently fanned-out join
+        links, docs = self._fixtures(spark)
+        auth = host_authority(links, "su", "du", iterations=1)
+        dup = authority_weighted_sample(
+            docs, "doc_id", "url", auth.unionByName(auth))
+        with pytest.raises(Exception, match="duplicate"):
+            dup.select(*docs.columns).collect()
 
     def test_partition_stability(self, spark):
         from dbldatagen_spark.functions import (
